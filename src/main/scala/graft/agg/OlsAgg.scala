@@ -35,7 +35,7 @@ case class OlsBuf(x: DeltaStats, y: DeltaStats, xty: Array[Double],
   }
 
   /** `cnt` identical rows in one O(k²) step — the driver-side cell path
-    * of the IRLS fits ([[graft.stats.DesignCells]]). Every accumulated
+    * of the IRLS fits ([[graft.stats.Cells]]). Every accumulated
     * quantity is linear in the row count, so this equals `cnt` calls of
     * [[update]](yv, xs, w) without the O(cnt) loop: sums gain
     * cnt·(√w·term), cross products cnt·(w·term), counts cnt. */

@@ -70,7 +70,7 @@ object Aft {
       // cells — zero distributed passes per iteration, identical
       // per-row likelihood math times the cell count. Columns:
       // 0 = __t, 1 = __d, 2..k+1 = __x*, k+2 = __y.
-      val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
+      val cellsOpt = graft.stats.Cells.collect(base, maxCells)
       val (n, nEvents, badT, badD, mu0, sd0) = cellsOpt match {
         case Some((cells, cnts)) =>
           var nn = 0L; var ne = 0L; var bt = 0L; var bd = 0L; var sy = 0.0

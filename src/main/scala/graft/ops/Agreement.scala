@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.Cells
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -132,8 +133,7 @@ object Agreement {
       .groupBy(coalesce(ad.cast("string"), as).as("a"),
         coalesce(bd.cast("string"), bs).as("b"))
       .agg(count(lit(1)).as("c"))
-    val cells = cellsDf.limit(maxCells + 1).collect()
-    require(cells.length <= maxCells,
+    val cells = Cells.rowsOrFail(cellsDf, maxCells,
       s"weighted_kappa: more than $maxCells distinct (a, b) cells — " +
         "κ_w is for bounded label spaces; bucket continuous scores first")
     require(cells.nonEmpty, "weighted_kappa: no complete pairs")
@@ -409,12 +409,10 @@ object Agreement {
     // order cells by the NUMERIC value when castable, else lexically —
     // both sides of a pair use the same order so the choice only has to
     // be consistent
-    val cells = df.filter(xs.isNotNull && ys.isNotNull)
+    val cells = Cells.rowsOrFail(df.filter(xs.isNotNull && ys.isNotNull)
       .groupBy(coalesce(xd.cast("string"), xs).as("x"),
         coalesce(yd.cast("string"), ys).as("y"))
-      .agg(count(lit(1)).as("c"))
-      .limit(maxCells + 1).collect()
-    require(cells.length <= maxCells,
+      .agg(count(lit(1)).as("c")), maxCells,
       s"kendall_tau: more than $maxCells distinct (x, y) cells — τ-b is " +
         "for discrete columns; bucket continuous inputs first (or raise " +
         "maxCells knowingly)")

@@ -199,12 +199,10 @@ object Ann {
       .filter(col("v").isNotNull)
       .select(col("neighbor_id"), posexplode(encodePq(index, col("v")))
         .as(Seq("sub", "code")))
-    val pRows = probes
+    val pRows = graft.stats.Cells.rowsOrFail(probes
       .select(probeId.cast("long").as("query_id"),
         probeVec.cast("array<double>").as("q"))
-      .filter(col("q").isNotNull)
-      .limit(maxProbes + 1).collect()
-    require(pRows.length <= maxProbes,
+      .filter(col("q").isNotNull), maxProbes,
       s"pq_knn probe set exceeds $maxProbes rows: batch the probes or " +
         "raise maxProbes if probes x corpus ADC sums are really intended")
     val lutRows = pRows.flatMap { r =>
@@ -258,8 +256,7 @@ object Ann {
       .select(probeId.cast("long").as("query_id"),
         probeVec.cast("array<double>").as("q"))
       .filter(col("q").isNotNull)
-    val pRows = pSlim.limit(maxProbes + 1).collect()
-    require(pRows.length <= maxProbes,
+    val pRows = graft.stats.Cells.rowsOrFail(pSlim, maxProbes,
       s"ivf_pq_knn probe set exceeds $maxProbes rows: batch the probes or " +
         "raise maxProbes")
     // probed cells per query (driver math over the collected probes — the

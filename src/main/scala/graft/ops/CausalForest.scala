@@ -173,7 +173,7 @@ object CausalForest {
       .drop("__th", "__rh") // __rh only seeds the membership draw
     val growFrame = if (honest) exploded.filter(col("__half") === 0) else exploded
     val estFrame = if (honest) exploded.filter(col("__half") === 1) else exploded
-    // Low-cardinality BINNED-design collapse (the DesignCells idiom,
+    // Low-cardinality BINNED-design collapse (the Cells idiom,
     // guide §1.2 step 1): navigation compares raw f against bin
     // BOUNDARIES, and f <= boundaries(f)(bi) ⟺ bin(f) <= bi, so node
     // assignment — and with it every level histogram AND the estimation
@@ -187,7 +187,7 @@ object CausalForest {
     // path below is byte-identical, exploded persisted as before.
     val slim = exploded.select(col("__tree") +: col("__half") +:
       (0 until k).map(i => col(s"__b$i")) :+ col("__t") :+ col("__y"): _*)
-    val forestCells = graft.stats.DesignCells.collectByX(slim, "__y", maxLocalCells)
+    val forestCells = graft.stats.Cells.collectByX(slim, "__y", maxLocalCells)
     if (forestCells.isEmpty)
       exploded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -251,7 +251,7 @@ object CausalForest {
       // tree on bin vectors is EXACTLY the row path's raw-value walk)
       val thrBin = Array.fill(numTrees)(scala.collection.mutable.ArrayBuffer(-1))
       // unpacked design cells (cell path only): per cell its tree, half,
-      // bin vector, arm, count and y moments — in DesignCells' sorted
+      // bin vector, arm, count and y moments — in Cells' sorted
       // order, so every driver accumulation below is deterministic
       val fc = forestCells.getOrElse(Array.empty)
       def cellNode(b: Int, binVec: Array[Int]): Int = {
@@ -260,7 +260,7 @@ object CausalForest {
           nd = if (binVec(feat(b)(nd)) <= thrBin(b)(nd)) lch(b)(nd) else rch(b)(nd)
         nd
       }
-      def cellBins(c: graft.stats.DesignCells.XCell): Array[Int] =
+      def cellBins(c: graft.stats.Cells.XCell): Array[Int] =
         Array.tabulate(k)(j => c.xs(2 + j).toInt)
       /** The level histogram over the GROW half: per (tree, node, feat,
         * bin, arm) counts and Σy — from the collected cells (zero

@@ -308,17 +308,14 @@ object Contingency {
     import spark.implicits._
     val xd = x.cast("double")
     val yd = y.cast("double")
-    // limit BEFORE collect so a mistakenly-continuous column pair bounds
-    // the driver collection itself, not just the post-hoc check
-    val cells = df.filter(xd.isNotNull && yd.isNotNull)
-      .groupBy(xd.as("x"), yd.as("y")).agg(count(lit(1)).as("c"))
-      .limit(maxCells + 1)
-      .collect()
-    require(cells.length >= 2, "ordinal_assoc: need at least 2 distinct cells")
-    require(cells.length <= maxCells,
+    // bounded collect so a mistakenly-continuous column pair bounds the
+    // driver collection itself, not just the post-hoc check
+    val cells = graft.stats.Cells.rowsOrFail(df.filter(xd.isNotNull && yd.isNotNull)
+      .groupBy(xd.as("x"), yd.as("y")).agg(count(lit(1)).as("c")), maxCells,
       s"ordinal_assoc: more than $maxCells distinct (x, y) cells — this " +
         "statistic is for ordinal domains; bin the columns first " +
         "(cut_bins) or raise maxCells")
+    require(cells.length >= 2, "ordinal_assoc: need at least 2 distinct cells")
     val cs = cells.map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
     val m = cs.length
     // per-cell concordant/discordant neighbor mass (A_ij / B_ij): each
@@ -418,31 +415,16 @@ object Contingency {
       // value-histogram quantile pass plus a separate group-count pass
       // plus two cell aggregates). NaN values bail; past the bound the
       // path below runs untouched (forced via maxLocalCells = 0).
-      val byGV = base.groupBy(col("__g"), col("__y"))
-        .agg(count(lit(1)).as("c"))
-      Robust.localCells(byGV, maxLocalCells) match {
-        case Some(rows)
-            if rows.forall(r => !r.getDouble(1).isNaN) =>
+      graft.stats.Cells.grouped(base, Seq("__g", "__y"), Seq(count(lit(1))),
+          maxLocalCells, keyed = true) match {
+        case Some(rows) =>
           val m = rows.length
-          // value histogram (merge across groups) for the grand median
-          val keys = new Array[Double](m)
-          locally { var i0 = 0; while (i0 < m) { keys(i0) = rows(i0).getDouble(1); i0 += 1 } }
-          val ord = Robust.sortPerm(keys)
-          val vs = new Array[Double](m); val cs = new Array[Long](m)
-          var w = -1
-          var i = 0
-          while (i < m) {
-            val r = rows(ord(i))
-            if (w >= 0 && vs(w) == r.getDouble(1)) cs(w) += r.getLong(2)
-            else { w += 1; vs(w) = r.getDouble(1); cs(w) = r.getLong(2) }
-            i += 1
-          }
-          val med = Robust.quantilesOnLocalHist(
-            java.util.Arrays.copyOf(vs, w + 1),
-            java.util.Arrays.copyOf(cs, w + 1), Seq(0.5), "mood_median")(0)
+          // the grand median reads the (value, count) cells of every group
+          val med = Robust.quantilesOnPairs(rows.map(_.getDouble(1)),
+            rows.map(_.getLong(2)), Seq(0.5), "mood_median")(0)
           // per-group (n, above) in sorted-group order (deterministic)
           val byG = scala.collection.mutable.TreeMap.empty[String, (Long, Long)]
-          i = 0
+          var i = 0
           while (i < m) {
             val r = rows(i)
             val g = r.getString(0); val c = r.getLong(2)

@@ -92,8 +92,7 @@ object EventStudy {
       // validate the grid on the collected cells (tiny, guarded) so a
       // missing base/comparison cell is a named error, not silently-
       // dropped rows
-      val cellRows = cells.limit(maxCells + 1).collect()
-      require(cellRows.length <= maxCells,
+      val cellRows = graft.stats.Cells.rowsOrFail(cells, maxCells,
         s"event_study produced more than $maxCells (cohort x period) cells — " +
           "these are not panel cohorts/periods; raise maxCells if they are")
       val byCohort = cellRows.groupBy(_.getLong(0))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.Cells
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -408,8 +409,7 @@ object MlEval {
       .agg(count(lit(1)).as("n"),
         sum(when(y === 1, 1L).otherwise(0L)).as("pos"),
         sum(when(y =!= 0 && y =!= 1, 1L).otherwise(0L)).as("bad"))
-    val cells = cellsDf.limit(maxCells + 1).collect()
-    require(cells.length <= maxCells,
+    val cells = Cells.rowsOrFail(cellsDf, maxCells,
       s"isotonic_calibrate: more than $maxCells distinct scores — " +
         "bucket the score first (or raise maxCells knowingly)")
     require(cells.nonEmpty, "isotonic_calibrate: no complete rows")

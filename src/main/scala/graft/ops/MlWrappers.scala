@@ -141,7 +141,7 @@ object MlWrappers {
       // in y given x and w depends only on x, so the per-cell moments
       // reproduce the row-scale weighted OLS buffer exactly. The whole
       // loop then runs driver-side: zero distributed passes/iteration.
-      val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
+      val cellsOpt = graft.stats.Cells.collectByX(slim, "__y", maxCells)
       cellsOpt match {
         case Some(cells) =>
           while (it < maxIter && !converged) {
@@ -256,7 +256,7 @@ object MlWrappers {
       // in y given x and the Fisher weight μ depends only on x, so the
       // per-x-cell y moments reproduce every IRLS aggregate (and the
       // Pearson pass) exactly — the loop runs driver-side.
-      val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
+      val cellsOpt = graft.stats.Cells.collectByX(slim, "__y", maxCells)
       cellsOpt match {
         case Some(cells) =>
           val nRows = cells.map(_.n).sum
@@ -269,7 +269,7 @@ object MlWrappers {
           var converged = false
           var it = 0
           var lastModel: OlsModel = null
-          def muOf(c: graft.stats.DesignCells.XCell): Double = {
+          def muOf(c: graft.stats.Cells.XCell): Double = {
             var eta = beta(k)
             var m = 0
             while (m < k) { eta += c.xs(m) * beta(m); m += 1 }
@@ -430,7 +430,7 @@ object MlWrappers {
       // log-link gamma IRLS weight is CONSTANT and z is linear in y
       // given x, so per-x-cell y moments reproduce every unweighted-OLS
       // aggregate (and the Pearson pass) exactly — driver-side loop.
-      val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
+      val cellsOpt = graft.stats.Cells.collectByX(slim, "__y", maxCells)
       cellsOpt match {
         case Some(cells) =>
           val nRows = cells.map(_.n).sum
@@ -445,7 +445,7 @@ object MlWrappers {
           var converged = false
           var it = 0
           var lastModel: OlsModel = null
-          def muOf(c: graft.stats.DesignCells.XCell): Double = {
+          def muOf(c: graft.stats.Cells.XCell): Double = {
             var eta = beta(k)
             var m = 0
             while (m < k) { eta += c.xs(m) * beta(m); m += 1 }
@@ -606,7 +606,7 @@ object MlWrappers {
       // collapse keys on the FULL (y, x…) row — count outcomes are
       // naturally low-cardinality. Everything (moment α, IRLS passes,
       // auxiliary SE, both likelihoods) then runs driver-side.
-      val cellsOpt = graft.stats.DesignCells.collect(slim, maxCells)
+      val cellsOpt = graft.stats.Cells.collect(slim, maxCells)
       cellsOpt match {
         case Some((cells, cnts)) =>
           val pilotBeta0 = pilot.coefficients :+ pilot.intercept

@@ -58,7 +58,7 @@ object Ordinal {
       // groupBy pass replaces the level scan, the count scan, AND every
       // per-iteration aggregate — the Newton loop then runs driver-side
       // over weighted cells. Columns: 0 = __y, 1..k = __x*.
-      val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
+      val cellsOpt = graft.stats.Cells.collect(base, maxCells)
       val levels = cellsOpt match {
         case Some((cells, _)) =>
           cells.map(_(0)).distinct.sorted.take(maxLevels + 1)

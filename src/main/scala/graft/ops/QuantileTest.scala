@@ -84,25 +84,14 @@ object QuantileTest {
       import spark.implicits._
       val yd = y.cast("double")
       val tc = treatment.cast("int")
-      val byV = df.filter(yd.isNotNull && (tc === 0 || tc === 1))
-        .groupBy(yd.as("v")).agg(
-          sum(when(tc === 0, 1L).otherwise(0L)).as("c0"),
-          sum(when(tc === 1, 1L).otherwise(0L)).as("c1"))
-      Robust.localCells(byV, maxLocalCells) match {
-        case Some(rows)
-            if rows.forall(r => !r.isNullAt(0) && !r.getDouble(0).isNaN) =>
-          val m = rows.length
-          val keys = new Array[Double](m)
-          locally { var i0 = 0; while (i0 < m) { keys(i0) = rows(i0).getDouble(0); i0 += 1 } }
-          val ord = Robust.sortPerm(keys)
-          val vs = new Array[Double](m)
-          val c0 = new Array[Long](m); val c1 = new Array[Long](m)
-          var i = 0
-          while (i < m) {
-            val r = rows(ord(i))
-            vs(i) = r.getDouble(0); c0(i) = r.getLong(1); c1(i) = r.getLong(2)
-            i += 1
-          }
+      val vt = df.filter(yd.isNotNull && (tc === 0 || tc === 1))
+        .select(yd.as("v"), tc.as("t"))
+      graft.stats.Cells.grouped(vt, Seq("v"), Seq(
+          sum(when(col("t") === 0, 1L).otherwise(0L)),
+          sum(when(col("t") === 1, 1L).otherwise(0L))), maxLocalCells) match {
+        case Some(rows) =>
+          val vs = rows.map(_.getDouble(0))
+          val c0 = rows.map(_.getLong(1)); val c1 = rows.map(_.getLong(2))
           // empty arm: Spark percentile returns null for the whole array —
           // bail to the distributed twin so its null row shape survives
           if (c0.exists(_ > 0) && c1.exists(_ > 0)) {

@@ -92,25 +92,16 @@ object RankTests {
     // so ONE map-side-combined groupBy pass + plain Scala replaces the two
     // RangeCumSum rank tables, their checkpoints, and the two row-scale
     // rank-attach joins. Past the bound the join path below is untouched.
-    Robust.localCells(base.groupBy(col("__x"), col("__y"))
-        .agg(count(lit(1)).as("c")), maxLocalCells) match {
-      case Some(rows) =>
-        val m = rows.length
-        val xs = new Array[Double](m); val ys = new Array[Double](m)
-        val cs = new Array[Long](m)
-        var n = 0L
-        var i = 0
-        while (i < m) {
-          val r = rows(i)
-          xs(i) = r.getDouble(0); ys(i) = r.getDouble(1); cs(i) = r.getLong(2)
-          n += cs(i)
-          i += 1
-        }
+    graft.stats.Cells.collect(base, maxLocalCells) match {
+      case Some((cells, cs)) =>
+        val m = cells.length
+        val xs = cells.map(_(0)); val ys = cells.map(_(1))
+        val n = cs.sum
         require(n >= 4, s"spearman: need at least 4 complete rows, got $n")
         // (value -> average rank) per column: tie-group cumulative counts,
         // rank = (cum - cnt + cum + 1) / 2 — the RangeCumSum formula
         def avgRanks(vals: Array[Double]): Array[Double] = {
-          val ord = Robust.sortPerm(vals)
+          val ord = graft.stats.Cells.sortPerm(vals)
           val rk = new Array[Double](m)
           var j = 0
           var cum = 0L
@@ -128,7 +119,7 @@ object RankTests {
         val rx = avgRanks(xs)
         val ry = avgRanks(ys)
         var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0; var syy = 0.0
-        i = 0
+        var i = 0
         while (i < m) {
           val c = cs(i).toDouble
           sx += rx(i) * c; sy += ry(i) * c
@@ -259,10 +250,10 @@ object RankTests {
     * (P scalars on the driver, not data). No global-order window. */
   def wasserstein1(df: DataFrame, value: Column, treatment: Column,
                    maxLocalCells: Int = Robust.MaxLocalCells): Double = {
-    val byValue = df
+    val vt = df
       .filter(!isnan(value) && value.isNotNull && treatment.isNotNull)
       .select(value.cast("double").as("v"), treatment.cast("int").as("t"))
-      .groupBy(col("v"))
+    val byValue = vt.groupBy(col("v"))
       .agg(sum(when(col("t") === 0, 1L).otherwise(0L)).as("c0"),
         sum(when(col("t") =!= 0, 1L).otherwise(0L)).as("c1"))
     // bounded driver collapse (Robust.MaxLocalCells idiom): the ECDF gap
@@ -270,26 +261,23 @@ object RankTests {
     // ONE distributed pass + a driver scan replaces the RangeCumSum
     // prefix sums, the per-partition boundary collect, and the lead
     // window. Past the bound the distributed path below runs untouched.
-    Robust.localCells(byValue, maxLocalCells).foreach { rows =>
+    graft.stats.Cells.rows(vt, Seq("v"), byValue, maxLocalCells).foreach { rows =>
       val m = rows.length
-      val keys = new Array[Double](m)
-      locally { var i0 = 0; while (i0 < m) { keys(i0) = rows(i0).getDouble(0); i0 += 1 } }
-      val ord = Robust.sortPerm(keys)
       var tn0 = 0L; var tn1 = 0L
       var i = 0
       while (i < m) {
-        val r = rows(ord(i)); tn0 += r.getLong(1); tn1 += r.getLong(2)
+        val r = rows(i); tn0 += r.getLong(1); tn1 += r.getLong(2)
         i += 1
       }
       if (tn0 == 0L || tn1 == 0L) return Double.NaN
       var cum0 = 0L; var cum1 = 0L; var w1 = 0.0
       i = 0
       while (i < m) {
-        val r = rows(ord(i))
+        val r = rows(i)
         cum0 += r.getLong(1); cum1 += r.getLong(2)
         if (i + 1 < m) {
           val gap = math.abs(cum0.toDouble / tn0 - cum1.toDouble / tn1)
-          w1 += gap * (rows(ord(i + 1)).getDouble(0) - r.getDouble(0))
+          w1 += gap * (rows(i + 1).getDouble(0) - r.getDouble(0))
         }
         i += 1
       }

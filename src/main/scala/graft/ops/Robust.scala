@@ -27,7 +27,7 @@ object Robust {
 
   // ------------------------------------------------------------------
   // Bounded DRIVER collapse for the exact order-statistic verbs (the
-  // DesignCells idiom applied to value histograms; guide §1.2 step 1).
+  // Cells idiom applied to value histograms; guide §1.2 step 1).
   // The exact-quantile family already avoids Spark `percentile`'s
   // all-values buffer via histogram + RangeCumSum — but the prefix-sum
   // machinery still costs a range-partition sort plus several small jobs
@@ -35,136 +35,56 @@ object Robust {
   // bounded, collecting it once and running every order statistic in
   // plain Scala is strictly cheaper at any data scale: ONE distributed
   // pass per verb, identical interpolation math, deterministic
-  // driver-side summation. Past the bound — or when plan statistics say
-  // the input is large enough that a row-scale cell table is plausible —
-  // the existing distributed paths run UNTOUCHED (spec-pinned via
-  // maxLocalCells = 0).
+  // driver-side summation. Past the bound — or when the Cells gate's
+  // sketch says a large input is far past it — the existing distributed
+  // paths run UNTOUCHED (spec-pinned via maxLocalCells = 0).
   // ------------------------------------------------------------------
 
   /** Default distinct-cell bound for the driver collapse: 2^21 cells of
     * a few doubles ≈ tens of MB collected — bounded driver state. */
   val MaxLocalCells: Int = 1 << 21
 
-  /** Inputs whose ESTIMATED size exceeds this skip the collapse probe
-    * outright: the fallbacks are themselves scale-safe single passes,
-    * and on a genuinely large input the probe's head() would still pay
-    * the full cell aggregate before bailing (the DesignCells big-input
-    * lesson). Unknown statistics read as big (safe side). */
-  private val bigInputBytes = BigInt(1L << 30)
-
-  private[ops] def smallInput(df: DataFrame): Boolean =
-    try df.queryExecution.optimizedPlan.stats.sizeInBytes <= bigInputBytes
-    catch { case _: Throwable => false }
-
-  /** Bounded driver collect of a cell frame: Some(rows) when `df` holds
-    * at most `maxCells` rows AND plan statistics say the input is small;
-    * None otherwise (callers fall back to their distributed path).
-    * Returns INTERNAL rows (SparkPlan.executeTake): a head()/collect()
-    * converts every row to an external GenericRow on the driver, which
-    * measured as ~1 s of single-threaded gap per ~600 k cells — the
-    * UnsafeRow batch is 5-10× cheaper to materialize and the callers
-    * only read primitives off it. */
-  private[ops] def localCells(df: DataFrame, maxCells: Int)
-      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
-    if (maxCells <= 0 || !smallInput(df)) return None
-    // executeTake's default partition ramp (1 → 4x…) runs several
-    // SEQUENTIAL jobs when the take is not satisfied early — measured
-    // ~1 s of pure wait on a 32-partition cell frame. The cell frame is
-    // statistics-gated small, so scan every partition in ONE parallel
-    // job; the take still stops DECODING at the bound.
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.limit.initialNumPartitions"
-    val prev = try conf.get(key) catch { case _: Throwable => null }
-    val rows = try {
-      conf.set(key, "10000")
-      df.queryExecution.executedPlan.executeTake(maxCells + 1)
-    } finally {
-      if (prev == null) conf.unset(key) else conf.set(key, prev)
-    }
-    if (rows.length > maxCells) None else Some(rows)
-  }
-
-  /** Permutation that sorts `keys` ascending (total order via
-    * Double.compare — NaN last, −0.0 < 0.0): a primitive-index quicksort;
-    * the boxed `Array.range(0, m).sortBy(keys(_))` equivalent measured
-    * 0.3-0.7 s per 600 k cells of pure driver gap. */
-  private[ops] def sortPerm(keys: Array[Double]): Array[Int] = {
-    val n = keys.length
-    val ix = new Array[Int](n)
-    var i = 0
-    while (i < n) { ix(i) = i; i += 1 }
-    def swap(a: Int, b: Int): Unit = { val t = ix(a); ix(a) = ix(b); ix(b) = t }
-    def cmp(a: Int, b: Int): Int = java.lang.Double.compare(keys(ix(a)), keys(ix(b)))
-    def insertion(lo: Int, hi: Int): Unit = {
-      var j = lo + 1
-      while (j <= hi) {
-        val v = ix(j)
-        val kv = keys(v)
-        var k = j - 1
-        while (k >= lo && java.lang.Double.compare(keys(ix(k)), kv) > 0) {
-          ix(k + 1) = ix(k); k -= 1
-        }
-        ix(k + 1) = v
-        j += 1
-      }
-    }
-    // explicit stack: cell counts reach 2^21 and a degenerate pivot run
-    // must not overflow the JVM stack
-    val stack = new java.util.ArrayDeque[Int]()
-    stack.push(0); stack.push(n - 1)
-    while (!stack.isEmpty) {
-      val hi = stack.pop(); val lo = stack.pop()
-      if (hi - lo < 32) { if (lo < hi) insertion(lo, hi) }
-      else {
-        // median-of-three pivot
-        val mid = (lo + hi) >>> 1
-        if (cmp(mid, lo) < 0) swap(mid, lo)
-        if (cmp(hi, lo) < 0) swap(hi, lo)
-        if (cmp(hi, mid) < 0) swap(hi, mid)
-        val pivot = keys(ix(mid))
-        // 3-way partition (many ties in histograms of discrete columns)
-        var lt = lo; var gt = hi; var p = lo
-        while (p <= gt) {
-          val c = java.lang.Double.compare(keys(ix(p)), pivot)
-          if (c < 0) { swap(lt, p); lt += 1; p += 1 }
-          else if (c > 0) { swap(p, gt); gt -= 1 }
-          else p += 1
-        }
-        if (lt - 1 > lo) { stack.push(lo); stack.push(lt - 1) }
-        if (hi > gt + 1) { stack.push(gt + 1); stack.push(hi) }
-      }
-    }
-    ix
-  }
-
   /** Bounded driver histogram: Some((values ascending, counts)) when the
     * (v, c) frame holds at most `maxCells` rows. Null or NaN values bail
-    * (the distributed paths' null/NaN ordering stays authoritative). */
+    * (the distributed paths' null/NaN ordering stays authoritative), and
+    * so does a fractional count: the distributed twin sums counts as
+    * doubles, so truncating them here would change the answer. */
   def localHistOnCounts(byV: DataFrame, maxCells: Int)
-      : Option[(Array[Double], Array[Long])] = {
-    localCells(byV.select(col("v").cast("double").as("v"),
-      col("c").cast("long").as("c")), maxCells).flatMap { rows =>
-      val n = rows.length
-      val vs = new Array[Double](n); val cs = new Array[Long](n)
-      var i = 0
-      var ok = true
-      while (ok && i < n) {
-        val r = rows(i)
-        if (r.isNullAt(0) || r.isNullAt(1) || r.getDouble(0).isNaN) ok = false
-        else { vs(i) = r.getDouble(0); cs(i) = r.getLong(1); i += 1 }
-      }
-      if (!ok) None
-      else {
-        val ord = sortPerm(vs)
-        Some((ord.map(vs), ord.map(cs)))
-      }
+      : Option[(Array[Double], Array[Long])] = localHist(byV, byV, maxCells)
+
+  /** [[localHistOnCounts]] of `byV`, a (v, c) histogram of `input`'s
+    * column v: the Cells gate sketches `input` when it is large, which
+    * costs a scan, not the histogram's aggregate. */
+  private def localHist(input: DataFrame, byV: DataFrame, maxCells: Int)
+      : Option[(Array[Double], Array[Long])] =
+    graft.stats.Cells.rows(input, Seq("v"), byV.select(
+      col("v").cast("double").as("v"), col("c").cast("double").as("c")),
+      maxCells).flatMap { rows =>
+      val cs = rows.map(r => if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
+      if (cs.exists(c => c != math.rint(c))) None // NaN fails too
+      else Some((rows.map(_.getDouble(0)), cs.map(_.toLong)))
     }
+
+  /** Value frame `v` and its (v, c) histogram for the non-null values
+    * of `x`. */
+  private def valueHist(df: DataFrame, x: Column): (DataFrame, DataFrame) = {
+    val xd = x.cast("double")
+    val vals = df.filter(xd.isNotNull).select(xd.as("v"))
+    (vals, vals.groupBy(col("v")).agg(count(lit(1)).as("c")))
+  }
+
+  /** [[quantilesOnLocalHist]] over (value, count) pairs in any order. */
+  private[ops] def quantilesOnPairs(vs: Array[Double], cs: Array[Long],
+                                    ps: Seq[Double], verb: String): Array[Double] = {
+    val ord = graft.stats.Cells.sortPerm(vs)
+    quantilesOnLocalHist(ord.map(vs), ord.map(cs), ps, verb)
   }
 
   /** Exact quantile_cont over a sorted (values, counts) histogram held on
     * the driver — the same interpolation as Spark `percentile` / DuckDB
     * `quantile_cont`, bit-for-bit (pos = p·(n−1);
-    * (hi−pos)·v_lo + (pos−lo)·v_hi). */
+    * (hi−pos)·v_lo + (pos−lo)·v_hi). A value may repeat: each rank
+    * still reads the value it falls on. */
   private[ops] def quantilesOnLocalHist(vs: Array[Double], cs: Array[Long],
                                         ps: Seq[Double], verb: String): Array[Double] = {
     val m = vs.length
@@ -219,13 +139,20 @@ object Robust {
     * value per requested percentile; `n == 0` is a named error. */
   def exactQuantilesOnCounts(byV: DataFrame, ps: Seq[Double],
                              verb: String = "exact_quantiles",
-                             maxLocalCells: Int = MaxLocalCells): Array[Double] = {
+                             maxLocalCells: Int = MaxLocalCells): Array[Double] =
+    quantilesOnCounts(byV, byV, ps, verb, maxLocalCells)
+
+  /** [[exactQuantilesOnCounts]] of `byV`, a histogram of `input` (the
+    * frame the collapse gate sketches, see [[localHist]]). */
+  private def quantilesOnCounts(input: DataFrame, byV: DataFrame,
+                                ps: Seq[Double], verb: String,
+                                maxLocalCells: Int): Array[Double] = {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"$verb: percentiles must be in [0, 1], got ${ps.mkString(",")}")
     // bounded driver collapse: collect the histogram once and interpolate
     // in plain Scala — removes the RangeCumSum sort + per-rank jobs; the
     // distributed prefix sum below stays authoritative past the bound
-    localHistOnCounts(byV, maxLocalCells) match {
+    localHist(input, byV, maxLocalCells) match {
       case Some((vs, cs)) => return quantilesOnLocalHist(vs, cs, ps, verb)
       case None => ()
     }
@@ -265,10 +192,8 @@ object Robust {
   def exactQuantiles(df: DataFrame, x: Column, ps: Seq[Double],
                      verb: String = "exact_quantiles",
                      maxLocalCells: Int = MaxLocalCells): Array[Double] = {
-    val xd = x.cast("double")
-    val byV = df.filter(xd.isNotNull).groupBy(xd.as("v"))
-      .agg(count(lit(1)).as("c"))
-    exactQuantilesOnCounts(byV, ps, verb, maxLocalCells)
+    val (vals, byV) = valueHist(df, x)
+    quantilesOnCounts(vals, byV, ps, verb, maxLocalCells)
   }
 
   /** (lower, upper) percentile bounds of `x`. */
@@ -321,10 +246,8 @@ object Robust {
       // authoritative).
       val spark = df.sparkSession
       import spark.implicits._
-      val xd = x.cast("double")
-      val byV = df.filter(xd.isNotNull).groupBy(xd.as("v"))
-        .agg(count(lit(1)).as("c"))
-      localHistOnCounts(byV, maxLocalCells) match {
+      val (vals, byV) = valueHist(df, x)
+      localHist(vals, byV, maxLocalCells) match {
         case Some((vs, cs)) =>
           require(pLo >= 0 && pHi <= 1 && pLo < pHi,
             s"bad percentiles [$pLo, $pHi]")
@@ -416,35 +339,19 @@ object Robust {
       // distinct-value frame. Also removes Spark `percentile`'s
       // all-values aggregation buffer — the documented executor-OOM
       // hazard of the exact path on an all-distinct column at scale.
-      val byV = base.groupBy(col("__x").as("v")).agg(count(lit(1)).as("c"))
+      val (vals, byV) = valueHist(base, col("__x"))
       // bounded driver collapse (see MaxLocalCells): the whole fence —
       // median, deviation histogram, MAD, clip counts — is a pure
       // function of the (value, count) cells, so under the bound ONE
       // distributed pass plus plain Scala replaces the RangeCumSum
       // machinery (2 prefix sums + a fence aggregate). Fallback below
       // is byte-identical past the bound.
-      localHistOnCounts(byV, maxLocalCells) match {
+      localHist(vals, byV, maxLocalCells) match {
         case Some((vs, cs)) =>
           val med = quantilesOnLocalHist(vs, cs, Seq(0.5), "mad_outliers")(0)
-          // |v − med| histogram: derive, re-sort, merge equal keys (the
-          // distributed twin groups by the exact double, same merge)
-          val m = vs.length
-          val dv = new Array[Double](m)
-          var i = 0
-          while (i < m) { dv(i) = math.abs(vs(i) - med); i += 1 }
-          val ordd = sortPerm(dv)
-          val dvs = new Array[Double](m); val dcs = new Array[Long](m)
-          var w = -1
-          i = 0
-          while (i < m) {
-            val j = ordd(i)
-            if (w >= 0 && dvs(w) == dv(j)) dcs(w) += cs(j)
-            else { w += 1; dvs(w) = dv(j); dcs(w) = cs(j) }
-            i += 1
-          }
-          val mad = quantilesOnLocalHist(
-            java.util.Arrays.copyOf(dvs, w + 1),
-            java.util.Arrays.copyOf(dcs, w + 1), Seq(0.5), "mad_outliers")(0)
+          // the |v − med| histogram: same counts, derived values
+          val mad = quantilesOnPairs(vs.map(v => math.abs(v - med)), cs,
+            Seq(0.5), "mad_outliers")(0)
           require(mad > 0,
             "mad_outliers: MAD is 0 — more than half the values are identical; " +
               "a deviation fence is undefined (use a frequency screen instead)")
@@ -454,8 +361,8 @@ object Robust {
           var n = 0L; var out = 0L
           var mnk = Double.NaN; var mxk = Double.NaN
           var anyKept = false
-          i = 0
-          while (i < m) {
+          var i = 0
+          while (i < vs.length) {
             n += cs(i)
             if (vs(i) < lo || vs(i) > hi) out += cs(i)
             else {
@@ -474,12 +381,12 @@ object Robust {
       }
       byV.persist()
       try {
-        val med = exactQuantilesOnCounts(byV, Seq(0.5), "mad_outliers",
-          maxLocalCells)(0)
+        // the histogram just failed the collapse, and the deviation
+        // histogram has at least half its cells: no second probe
+        val med = exactQuantilesOnCounts(byV, Seq(0.5), "mad_outliers", 0)(0)
         val devV = byV.select(abs(col("v") - lit(med)).as("v"), col("c"))
           .groupBy(col("v")).agg(sum(col("c")).as("c"))
-        val mad = exactQuantilesOnCounts(devV, Seq(0.5), "mad_outliers",
-          maxLocalCells)(0)
+        val mad = exactQuantilesOnCounts(devV, Seq(0.5), "mad_outliers", 0)(0)
         require(mad > 0,
           "mad_outliers: MAD is 0 — more than half the values are identical; " +
             "a deviation fence is undefined (use a frequency screen instead)")
@@ -584,28 +491,17 @@ object Robust {
       // value, a treatment outside {0, 1}, or a missing arm bails to the
       // distributed twin (its error/ordering semantics stay
       // authoritative); forced via maxLocalCells = 0 in the spec.
-      val byV = base.groupBy(yd.as("v")).agg(
-        sum(when(ti === 0, 1L).otherwise(0L)).as("c0"),
-        sum(when(ti === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(ti =!= 0 && ti =!= 1, 1L).otherwise(0L)).as("cb"))
-      localCells(byV, maxLocalCells) match {
-        case Some(rows)
-            if rows.forall(r => !r.isNullAt(0) && !r.getDouble(0).isNaN) =>
+      val ta = col("t")
+      graft.stats.Cells.grouped(base.select(yd.as("v"), ti.as("t")), Seq("v"),
+          Seq(sum(when(ta === 0, 1L).otherwise(0L)),
+            sum(when(ta === 1, 1L).otherwise(0L)),
+            sum(when(ta =!= 0 && ta =!= 1, 1L).otherwise(0L))),
+          maxLocalCells) match {
+        case Some(rows) =>
           val m = rows.length
-          val keys = new Array[Double](m)
-          locally { var i0 = 0; while (i0 < m) { keys(i0) = rows(i0).getDouble(0); i0 += 1 } }
-          val ord = sortPerm(keys)
-          val vs = new Array[Double](m)
-          val c0 = new Array[Long](m); val c1 = new Array[Long](m)
-          var bad = 0L
-          var i = 0
-          while (i < m) {
-            val r = rows(ord(i))
-            vs(i) = r.getDouble(0)
-            c0(i) = r.getLong(1); c1(i) = r.getLong(2)
-            bad += r.getLong(3)
-            i += 1
-          }
+          val vs = rows.map(_.getDouble(0))
+          val c0 = rows.map(_.getLong(1)); val c1 = rows.map(_.getLong(2))
+          val bad = rows.map(_.getLong(3)).sum
           val n0 = c0.sum; val n1 = c1.sum
           if (bad == 0L && n0 > 0L && n1 > 0L) {
             (0 to 1).foreach { k =>

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.stats.Dist
+import graft.stats.{Cells, Dist}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -107,15 +107,12 @@ object SimpleTests {
                         maxCells: Int = 100000): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cells = df.filter(a.isNotNull && b.isNotNull)
+    val cells = Cells.rowsOrFail(df.filter(a.isNotNull && b.isNotNull)
       .groupBy(a.cast("string").as("__a"), b.cast("string").as("__b"))
-      .agg(count(lit(1)).as("c"))
-      .limit(maxCells + 1)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    require(cells.length <= maxCells,
+      .agg(count(lit(1)).as("c")), maxCells,
       s"chisq_independence: more than $maxCells contingency cells — these " +
         "are not categorical columns; raise maxCells if they really are")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val rowT = cells.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum }
     val colT = cells.groupBy(_._2).map { case (k, v) => k -> v.map(_._3).sum }
     val n = cells.map(_._3).sum
@@ -158,15 +155,12 @@ object SimpleTests {
             maxCells: Int = 100000): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cells = df.filter(a.isNotNull && b.isNotNull)
+    val cells = Cells.rowsOrFail(df.filter(a.isNotNull && b.isNotNull)
       .groupBy(a.cast("string").as("__a"), b.cast("string").as("__b"))
-      .agg(count(lit(1)).as("c"))
-      .limit(maxCells + 1)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    require(cells.length <= maxCells,
+      .agg(count(lit(1)).as("c")), maxCells,
       s"g_test: more than $maxCells contingency cells — these are not " +
         "categorical columns; raise maxCells if they really are")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val rowT = cells.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum }
     val colT = cells.groupBy(_._2).map { case (k, v) => k -> v.map(_._3).sum }
     val n = cells.map(_._3).sum

@@ -391,7 +391,7 @@ object Survival {
   }
 
   /** Driver-side replay of [[coxCellAggs]]'s bucketed groupBy over
-    * COLLAPSED design cells (the [[graft.stats.DesignCells]] idiom,
+    * COLLAPSED design cells (the [[graft.stats.Cells]] idiom,
     * guide §1.2 step 1): each distinct (t, e, x…) row contributes its
     * row formula times its multiplicity, accumulated per bucketed event
     * time in the cells' sorted order (deterministic), emitted time-DESC
@@ -654,7 +654,7 @@ object Survival {
       // event × bucketed x easily passes 4k while staying trivially
       // driver-sized: 32k cells × ~10 doubles ≈ 2.6 MB, and the probe's
       // head() bounds the collection before it happens).
-      graft.stats.DesignCells.collect(base0, maxCells) match {
+      graft.stats.Cells.collect(base0, maxCells) match {
         case Some((dc, cnts)) =>
           val nAll = cnts.sum
           val evTimes = dc.iterator.filter(c => c(1) == 1.0).map(_(0))
@@ -1107,7 +1107,7 @@ object Survival {
     // distinct (t, cause, x…) rows in maxCells, the domain counts, the
     // censoring KM, the role bucketing, AND every downstream cell pass
     // run driver-side — the whole verb costs ONE distributed pass
-    graft.stats.DesignCells.collect(base0, maxCells) match {
+    graft.stats.Cells.collect(base0, maxCells) match {
       case Some((dc, cnts)) =>
         base0.unpersist()
         var n = 0L; var n1 = 0L; var ncp = 0L; var n0 = 0L; var bad = 0L
@@ -1633,7 +1633,7 @@ object Survival {
     // the residual pass at β̂: driver arithmetic over collapsed design
     // cells when the design fits (the coxPh idiom), else the distributed
     // per-event-time cell aggregate
-    val (evTimes, cs) = graft.stats.DesignCells.collect(base0,
+    val (evTimes, cs) = graft.stats.Cells.collect(base0,
         maxCells) match {
       case Some((dc, cnts)) =>
         val ev = dc.iterator.filter(c => c(1) == 1.0).map(_(0))
@@ -1774,7 +1774,7 @@ object Survival {
       // low-cardinality design collapse (the coxPh idiom with the
       // stratum riding the cell key): one probe pass, then grids,
       // bucketing, and every Newton pass in driver arithmetic
-      graft.stats.DesignCells.collectWithKey(base0, maxCells) match {
+      graft.stats.Cells.collectWithKey(base0, maxCells) match {
         case Some((keys, dc, cnts)) =>
           val nAll = cnts.sum
           // per-stratum event-time grids from the cells (sorted strata)
@@ -1895,7 +1895,7 @@ object Survival {
     // the one cell pass at β: driver arithmetic over collapsed design
     // cells when the design fits (the coxPh idiom), else distributed
     val cs: Array[(Double, Double, Double)] = // (t, d, a0) time-DESC
-      graft.stats.DesignCells.collect(base0, maxCells) match {
+      graft.stats.Cells.collect(base0, maxCells) match {
         case Some((dc, cnts)) =>
           val ev = dc.iterator.filter(c => c(1) == 1.0).map(_(0))
             .toArray.distinct.sorted

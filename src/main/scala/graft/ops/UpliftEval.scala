@@ -151,13 +151,12 @@ object UpliftEval {
     // does not reuse the exchange across differently-projected subtrees).
     val cells0 = withRep.groupBy((groupCols :+ "rep").map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    val cellRows = cells0.collect()
     // runaway guard (caliper maxCells idiom): a user-supplied bucket column
     // with row-scale cardinality would make the "bounded" frame unbounded —
-    // fail with the cause named rather than degrade downstream
-    require(cellRows.length <= UpliftEval.maxCells,
-      s"uplift evaluation produced ${cellRows.length} cells " +
-        s"(> maxCells=${UpliftEval.maxCells}): the bucket column " +
+    // fail with the cause named before the cells reach the driver
+    val cellRows = graft.stats.Cells.rowsOrFail(cells0, UpliftEval.maxCells,
+      s"uplift evaluation produced more than ${UpliftEval.maxCells} cells " +
+        s"(maxCells=${UpliftEval.maxCells}): the bucket column " +
         s"${bucketCol.getOrElse("")} looks row-scale; bucket scores with " +
         "assignBuckets (bounded nBuckets) instead, or raise UpliftEval.maxCells")
     var cells = df.sparkSession.createDataFrame(

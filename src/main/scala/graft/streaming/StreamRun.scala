@@ -32,13 +32,22 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   */
 object StreamRun {
 
-  /** Best-effort size of one input file (local or hadoop-visible path);
-    * -1 when unknown (the partition derivation then keeps the session
-    * value). */
+  /** Best-effort size of one input (local or hadoop-visible path): a
+    * file's length, or for a directory-shaped dataset (parquet parts)
+    * the summed length of every regular file under it — a directory's
+    * own length is its inode size (~4 KB), which would clamp the stream
+    * to one partition at any scale. -1 when unknown (the partition
+    * derivation then keeps the session value). */
   def inputBytes(dir: String, file: String): Long =
     try {
       val f = new java.io.File(dir, file)
-      if (f.exists) f.length else -1L
+      if (!f.exists) -1L
+      else {
+        val walk = java.nio.file.Files.walk(f.toPath)
+        try walk.filter(java.nio.file.Files.isRegularFile(_))
+          .mapToLong(java.nio.file.Files.size(_)).sum()
+        finally walk.close()
+      }
     } catch { case _: Throwable => -1L }
 
   /** Start `w` with AvailableNow, a tmpfs scratch checkpoint, and

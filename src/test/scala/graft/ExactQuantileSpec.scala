@@ -38,6 +38,22 @@ class ExactQuantileSpec extends AnyFunSuite {
 
   test("single value") { check(Seq(42.0)) }
 
+  test("fractional counts: driver collapse == distributed path") {
+    // weights, not counts: the collapse must not truncate 0.5 to 0
+    val byV = Seq((1.0, 0.5), (2.0, 2.5), (3.0, 1.0), (4.0, 3.25))
+      .toDF("v", "c")
+    assert(graft.ops.Robust.localHistOnCounts(byV, 100).isEmpty)
+    val qs = Seq(0.1, 0.5, 0.9)
+    val fast = graft.ops.Robust.exactQuantilesOnCounts(byV, qs)
+    val dist = graft.ops.Robust.exactQuantilesOnCounts(byV, qs,
+      maxLocalCells = 0)
+    assert(fast.toSeq == dist.toSeq)
+    // integral counts still collapse
+    val whole = byV.select(col("v"), ceil(col("c")).as("c"))
+    assert(graft.ops.Robust.localHistOnCounts(whole, 100).map(_._2.toSeq) ==
+      Some(Seq(1L, 3L, 1L, 4L)))
+  }
+
   test("empty input is a named error") {
     val df = Seq.empty[Double].toDF("x")
     val e = intercept[IllegalArgumentException] {

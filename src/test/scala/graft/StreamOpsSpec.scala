@@ -239,4 +239,27 @@ class StreamOpsSpec extends AnyFunSuite {
         && closed.head.duration == 500L)
     } finally q.stop()
   }
+
+  test("inputBytes sums the part files of a directory-shaped parquet dataset") {
+    val root = java.nio.file.Files.createTempDirectory("graft_input_bytes").toFile
+    try {
+      spark.range(0, 20000, 1, 3).toDF("id")
+        .write.parquet(new java.io.File(root, "events.parquet").getPath)
+      val dir = new java.io.File(root, "events.parquet")
+      val parts = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(parts.length == 3)
+      val bytes = graft.streaming.StreamRun.inputBytes(root.getPath, "events.parquet")
+      // every part counts; a directory's own length (its inode) would not
+      assert(bytes >= parts.map(_.length).sum)
+      assert(bytes > 3 * 4096L)
+      assert(graft.streaming.StreamRun.inputBytes(dir.getPath, parts.head.getName) ==
+        parts.head.length)
+      assert(graft.streaming.StreamRun.inputBytes(root.getPath, "missing") == -1L)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(root)
+    }
+  }
 }
